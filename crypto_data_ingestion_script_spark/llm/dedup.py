@@ -32,6 +32,10 @@ def _tokens():
 #: guard branches are plan-pinned in tests/test_token_rank.py.
 VOCAB_BROADCAST_CAP = 5_000_000
 
+#: Width of the Jaccard join's per-set bitmap signature: one bigint, so
+#: the signature rides each prefix row as a single fixed-width column.
+BITMAP_BITS = 64
+
 
 def token_rank(tok: DataFrame, broadcast_cap: int | None = None):
     """Rarity-ranked integer keys for a ``(doc_id, tok)`` exploded token
@@ -1346,12 +1350,29 @@ def q_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
        which case true overlap (<= the minimal-occurrence bound) fails
        too. At n~23, tau=0.9 this kills every candidate seeded at prefix
        position 3+, a ~2x candidate cut on this corpus.
+    4. **Bitmap filter** (Sandes, Teodoro and Melo, Information Systems
+       2020). Each distinct set carries a ``BITMAP_BITS`` = 64-bit
+       signature ``bm = OR of 1 << (k mod 64)`` over its rank keys k —
+       one bigint per prefix row, no arrays in the join. Every bit set in
+       ``ba & ~bb`` is a distinct element of A missing from B, so
+       ``|A n B| <= na - popcount(ba & ~bb)`` (and symmetrically for B);
+       the join keeps a candidate only if the smaller of the two bounds
+       reaches the same required overlap as the positional filter. Exact
+       for any vocabulary: key collisions mod 64 only loosen the bound,
+       never tighten it. Pruned pairs never reach the id-pair dedup
+       shuffle, the set re-joins or array_intersect. On the benchmark's
+       llm_dedup corpus (5,000 docs, 3,917 distinct sets, seed 3) the
+       prefix + positional join emitted 1,974,316 rows (1,741,688
+       distinct set pairs) of which 29,516 verify; with the bitmap it
+       emits 48,933 rows (29,516 pairs — its 31-token vocabulary fits in
+       64 bits, so the bound is exact there).
 
     Each distinct set emits its first |A| - ceil(tau*|A|) + 1 rarest keys
     as join keys; two sets with disjoint prefixes provably cannot reach
-    Jaccard tau (proved against brute force in
-    tests/test_properties.py:258). Candidates join on the prefix key plus
-    the length filter (tau*|A| <= |B| <= |A|/tau) and the positional
+    Jaccard tau (proved against brute force, with the bitmap bound, in
+    tests/test_properties.py::test_jaccard_prefix_filter_no_false_negatives).
+    Candidates join on the prefix key plus the length filter
+    (tau*|A| <= |B| <= |A|/tau), the positional filter and the bitmap
     filter, dedup on the id pair ALONE (no array payload through the
     shuffle), re-fetch their key arrays by joining the distinct-set table
     back (planner broadcasts it at this scale; plain shuffle join at
@@ -1380,7 +1401,11 @@ def jaccard_set_core(docs: DataFrame, tau: float):
     only need counts multiply member-list sizes instead of exploding
     (measured r12: the member-pair explosion at benchdata/sf10 — 100x
     duplicate depth, ~10^4 member pairs per set pair — wedged the sf10
-    scale leg; the set-grain aggregate runs in seconds)."""
+    scale leg; the set-grain aggregate runs in seconds). Candidates pass
+    the exact 64-bit bitmap bound min(na - popcount(ba & ~bb), nb -
+    popcount(bb & ~ba)) >= tau/(1+tau)*(na+nb) inside the prefix join
+    (q_jaccard_join item 4): on llm_dedup it cuts 1,741,688 distinct
+    candidate set pairs to the 29,516 that verify."""
     tok = (
         docs.select(
             "doc_id",
@@ -1395,9 +1420,15 @@ def jaccard_set_core(docs: DataFrame, tau: float):
     # join back to the fact is a plain shuffle join.
     rank, _strategy = token_rank(tok)
     keyed = tok.join(rank, "tok").select("doc_id", F.col("r").alias("k"))
-    toksets = keyed.groupBy("doc_id").agg(F.sort_array(F.collect_list("k")).alias("rs"))
+    # bm: 64-bit bitmap of the set's keys (bit k mod 64), the bitmap
+    # filter's signature (see q_jaccard_join item 4). A function of rs, so
+    # grouping on (rs, bm) below keeps exactly the distinct-set groups.
+    toksets = keyed.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("k")).alias("rs"),
+        F.bit_or(F.expr(f"shiftleft(1L, CAST(pmod(k, {BITMAP_BITS}) AS INT))")).alias("bm"),
+    )
     sets = (
-        toksets.groupBy("rs")
+        toksets.groupBy("rs", "bm")
         .agg(
             F.min("doc_id").alias("gid"),
             F.sort_array(F.collect_list("doc_id")).alias("members"),
@@ -1415,17 +1446,20 @@ def jaccard_set_core(docs: DataFrame, tau: float):
     prefixes = sets.select(
         "gid",
         "n",
+        "bm",
         F.posexplode(F.expr("slice(rs, 1, plen)")).alias("p0", "pkey"),
-    ).select("gid", "n", (F.col("p0") + 1).alias("pos"), "pkey")
+    ).select("gid", "n", "bm", (F.col("p0") + 1).alias("pos"), "pkey")
     a = prefixes.select(
         F.col("gid").alias("ga"),
         F.col("n").alias("na"),
+        F.col("bm").alias("ba"),
         F.col("pos").alias("pa"),
         F.col("pkey"),
     )
     b = prefixes.select(
         F.col("gid").alias("gb"),
         F.col("n").alias("nb"),
+        F.col("bm").alias("bb"),
         F.col("pos").alias("pb"),
         F.col("pkey"),
     )
@@ -1444,6 +1478,14 @@ def jaccard_set_core(docs: DataFrame, tau: float):
             # positional filter: see docstring item 3.
             & (
                 (1 + F.least(F.col("na") - F.col("pa"), F.col("nb") - F.col("pb")))
+                >= req
+            )
+            # bitmap filter: see docstring item 4.
+            & (
+                F.least(
+                    F.col("na") - F.bit_count(F.col("ba").bitwiseAND(F.bitwise_not("bb"))),
+                    F.col("nb") - F.bit_count(F.col("bb").bitwiseAND(F.bitwise_not("ba"))),
+                )
                 >= req
             ),
         )

@@ -10,11 +10,16 @@ same plan serializes entirely.
 
 ``ensure_parallelism`` resolves the tension adaptively instead of picking
 one scale's answer: repartition round-robin ONLY when the input's planned
-partition count is below the session's parallelism. The check is
-plan-time (no job runs); when the input is already well-split — the
-100 TB case — the DataFrame passes through untouched, so the shuffle
-exists precisely when it is cheap (input small enough to plan as few
-tasks) and needed (cores would otherwise idle).
+partition count is below the session's parallelism. When the input is
+already well-split — the 100 TB case — the DataFrame passes through
+untouched, so the shuffle exists precisely when it is cheap (input small
+enough to plan as few tasks) and needed (cores would otherwise idle).
+
+The check is NOT free of jobs: under AQE, ``df.rdd.getNumPartitions()``
+materializes the input's upstream shuffle stages to learn the coalesced
+partition count — one job on an aggregate input, two on a
+join+aggregate input. Those jobs run at DataFrame-construction time,
+before the caller's action.
 
 Round-robin rather than key-based: the goal is balanced COMPUTE, and the
 downstream op (broadcast join probe, map-side signature) does not require
@@ -50,22 +55,28 @@ def ensure_parallelism(
     parallelism and behavior is unchanged."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if bytes_per_task:
-        # Plan-stat probe via private py4j internals (no public size-estimate
-        # API exists). Scoped to the py4j/attribute error classes an API
-        # drift would raise, and logged, so a Spark upgrade that moves the
-        # accessor can't silently disable the cap (ADVICE r13).
-        import py4j.protocol
-
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
+        est = _planned_bytes(df)
+        if est is not None:
             target = max(1, min(target, -(-est // bytes_per_task)))
-        except (py4j.protocol.Py4JError, AttributeError, ValueError, TypeError) as ex:
-            logger.debug(
-                "ensure_parallelism: plan-size probe failed (%s); "
-                "falling back to core-count target %d", ex, target
-            )
     if df.rdd.getNumPartitions() < target * min_factor:
         return df.repartition(target) if target > 1 else df
     return df
+
+
+def _planned_bytes(df: DataFrame) -> int | None:
+    """The optimized plan's size estimate in bytes, or None when the probe
+    fails and the caller keeps its core-count target. Plan-stat probe via
+    private py4j internals (no public size-estimate API exists). Scoped to
+    the import, py4j and attribute error classes an API drift or a
+    py4j-less client would raise, and logged, so a Spark upgrade that
+    moves the accessor can't silently disable the cap."""
+    try:
+        from py4j.protocol import Py4JError
+    except ImportError as ex:
+        logger.debug("ensure_parallelism: py4j unavailable (%s)", ex)
+        return None
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (Py4JError, AttributeError, ValueError, TypeError) as ex:
+        logger.debug("ensure_parallelism: plan-size probe failed (%s)", ex)
+        return None

@@ -264,3 +264,53 @@ def test_suffix_lcp_sound_and_detects_all_docs(spark):
         assert LCP_MIN <= lcp <= lcs(toks[a_id], toks[b_id]), (a_id, b_id, lcp)
     docs_got = {d for pair in got for d in pair}
     assert docs_got == docs_expect
+
+
+def test_jaccard_pairs_bitmap_collisions_match_brute_force(spark):
+    """jaccard_pairs' bitmap filter must stay exact when rank keys collide
+    mod 64. The shipped corpora have ~31-token vocabularies, where the
+    64-bit bitmap is collision-free; this corpus draws from 800 tokens
+    (>= 500 distinct in use) with planted near-duplicates — token drops,
+    adds and swaps, some landing exactly on jaccard 0.9 — and the engine's
+    pair list must equal a brute-force Python scan."""
+    import random
+
+    from crypto_data_ingestion_script_spark.llm.dedup import jaccard_pairs
+
+    rng = random.Random(23)
+    vocab = [f"t{i:03d}" for i in range(800)]
+    docs = []
+    for _ in range(60):
+        base = rng.sample(vocab, rng.randint(15, 40))
+        docs.append(base)
+        for _ in range(rng.randint(0, 4)):
+            v = list(base)
+            edit = rng.choice(("copy", "drop", "add", "swap", "drop2"))
+            if edit in ("drop", "drop2"):
+                for _ in range(1 if edit == "drop" else 2):
+                    v.remove(rng.choice(v))
+            elif edit == "add":
+                v.append(rng.choice(vocab))
+            elif edit == "swap":
+                v[rng.randrange(len(v))] = rng.choice(vocab)
+            rng.shuffle(v)
+            docs.append(v)
+    texts = [" ".join(d) for d in docs]
+    sets = [set(d) for d in docs]
+    assert len(set().union(*sets)) >= 500
+
+    expected = set()
+    for i in range(len(sets)):
+        for j in range(i + 1, len(sets)):
+            jac = len(sets[i] & sets[j]) / len(sets[i] | sets[j])
+            if jac >= 0.9:
+                expected.add((i, j, round(jac, 6)))
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    got = {
+        (r["doc_a"], r["doc_b"], r["jaccard"])
+        for r in jaccard_pairs(df, 0.9).collect()
+    }
+    assert got == expected
+    # not vacuous: near-duplicate (jaccard < 1) pairs, one exactly at 0.9
+    assert any(j < 1.0 for _, _, j in expected)
+    assert any(j == 0.9 for _, _, j in expected)

@@ -167,3 +167,31 @@ def test_ensure_parallelism_bytes_cap(spark, sf_dir):
     # a 1-byte cap degenerates to the core-count target (bounded above).
     wide = ensure_parallelism(emb, bytes_per_task=1)
     assert wide.rdd.getNumPartitions() == target
+
+
+def test_ensure_parallelism_bytes_cap_falls_back_without_py4j(spark, monkeypatch):
+    """When the plan-size probe cannot import py4j.protocol the cap is
+    dropped, not raised: the guard falls back to the core-count target.
+    pyspark itself imports py4j.protocol on every JVM call, so the module
+    is blocked only while the probe runs."""
+    import sys
+
+    from crypto_data_ingestion_script_spark import partitioning
+
+    target = spark.sparkContext.defaultParallelism
+    narrow = spark.range(1000).coalesce(1)
+    # with the probe working, a huge per-task budget keeps the input narrow
+    kept = partitioning.ensure_parallelism(narrow, bytes_per_task=1 << 40)
+    assert kept.rdd.getNumPartitions() == 1
+
+    probe = partitioning._planned_bytes
+
+    def probe_without_py4j(df):
+        with monkeypatch.context() as m:
+            m.setitem(sys.modules, "py4j.protocol", None)
+            return probe(df)
+
+    assert probe_without_py4j(narrow) is None
+    monkeypatch.setattr(partitioning, "_planned_bytes", probe_without_py4j)
+    fallback = partitioning.ensure_parallelism(narrow, bytes_per_task=1 << 40)
+    assert fallback.rdd.getNumPartitions() == target

@@ -330,24 +330,33 @@ def test_connected_components_matches_union_find(spark):
 
 
 def test_jaccard_prefix_filter_no_false_negatives():
-    """q_jaccard_join's pruning rule: rank tokens by global rarity, keep
+    """q_jaccard_join's pruning rules: rank tokens by global rarity, keep
     each set's first n - ceil(tau*n) + 1 tokens as join keys; pairs with
-    disjoint prefixes are discarded WITHOUT exact verification. If that
-    ever dropped a true pair the operator would silently under-report, so
-    prove the guarantee on random universes against brute force."""
+    disjoint prefixes are discarded WITHOUT exact verification, and so are
+    pairs whose 64-bit bitmap bound min(na - popcount(ba & ~bb),
+    nb - popcount(bb & ~ba)) falls below the required overlap
+    tau/(1+tau)*(na+nb). If either rule ever dropped a true pair the
+    operator would silently under-report, so prove the guarantee on random
+    universes against brute force. Universes reach ~200 tokens so rank
+    keys collide mod 64 and the bitmap bound is genuinely loose."""
     import math
     import random
 
+    from crypto_data_ingestion_script_spark.llm.dedup import BITMAP_BITS
+
     rng = random.Random(7)
     tau = 0.9
+    n_true = n_loose = 0
     for trial in range(300):
-        universe = list(range(rng.randint(5, 40)))
+        universe = list(range(rng.randint(5, 200)))
+        # a low flip rate keeps near-duplicates present in large universes
+        flip = rng.choice((0.02, 0.05, 0.15))
         sets = []
         base = rng.sample(universe, rng.randint(1, len(universe)))
         for _ in range(rng.randint(2, 8)):
             s = set(base)
             for tok in universe:
-                if rng.random() < 0.15:
+                if rng.random() < flip:
                     (s.discard if tok in s else s.add)(tok)
             if s:
                 sets.append(frozenset(s))
@@ -360,14 +369,32 @@ def test_jaccard_prefix_filter_no_false_negatives():
             ranked = sorted(s, key=order.__getitem__)
             plen = len(s) - math.ceil(tau * len(s)) + 1
             return set(ranked[:plen])
+        def bitmap(s):
+            # engine keys are 1-based ranks; bit = key mod 64
+            return sum({1 << ((order[t] + 1) % BITMAP_BITS) for t in s})
         for i in range(len(sets)):
             for j in range(i + 1, len(sets)):
                 a, b = sets[i], sets[j]
                 jac = len(a & b) / len(a | b)
                 if jac >= tau:
+                    n_true += 1
                     assert prefix(a) & prefix(b), (
                         f"trial {trial}: true pair pruned (jaccard={jac})"
                     )
+                    ba, bb = bitmap(a), bitmap(b)
+                    bound = min(
+                        len(a) - bin(ba & ~bb).count("1"),
+                        len(b) - bin(bb & ~ba).count("1"),
+                    )
+                    # the engine's req, 1e-9 slack included
+                    req = tau / (1 + tau) * (len(a) + len(b)) - 1e-9
+                    assert bound >= req, (
+                        f"trial {trial}: bitmap bound {bound} pruned a true "
+                        f"pair (jaccard={jac})"
+                    )
+                    n_loose += bound > len(a & b)
+    # not vacuous: many true pairs, and collisions loosen some bounds
+    assert n_true >= 500 and n_loose >= 100, (n_true, n_loose)
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
